@@ -63,8 +63,8 @@ def _replicated_docs(spark, sf_dir: str, replicate: int):
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     # distribute BEFORE fanning out: shuffling the 5k base rows costs ~2 MB;
     # repartitioning after the explode would shuffle the full replicated
-    # corpus. Downstream (extract_pipeline) sees enough partitions and
-    # skips its own repartition — the decode stage runs shuffle-free.
+    # corpus. Downstream, extract_pipeline hash-repartitions the
+    # sentences to balance the decode stage.
     docs = docs.repartition(spark.sparkContext.defaultParallelism * 2)
     if replicate > 1:
         docs = docs.withColumn(

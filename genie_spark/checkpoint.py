@@ -9,13 +9,15 @@ genie/models/genie_base_pl.py:275-297, is not idempotent). Design:
   document key: ``chunk = pmod(xxhash64(url), n_chunks)``. Chunk membership
   depends only on the data — never on cluster size or input split — so a
   resume at different parallelism processes exactly the complete remainder.
-* Each chunk's output lands under ``out/chunk=<k>/`` in one atomic write;
-  a ``_lineage`` table records (chunk, n_docs, n_sentences, n_triples,
-  wall_s, docs_per_s, finished_ts) one row per completed chunk.
-* Resume = anti-join the chunk list against ``_lineage`` — already-done
-  chunks are never rescanned (partition pruning on the chunk column for
-  readers). On Iceberg the same layout maps to partitioned appends +
-  snapshot metadata; locally it is Parquet directories, same semantics.
+  ``run_checkpointed`` is the only place that assigns chunks.
+* Each chunk group's output lands under ``out/data/chunk=<k>/`` in one
+  write; ``_lineage/chunk_<k>.json`` records (chunk, n_docs, n_rows,
+  n_triples, wall_s, docs_per_s, finished_ts) once chunk k is committed,
+  with the row/triple counts observed on the write itself (no read-back).
+* Resume = skip chunks with a committed record (a ``.tmp`` left by a crash
+  is not one) and roll back whatever data the others left. On Iceberg the
+  same layout maps to partitioned appends + snapshot metadata; locally it
+  is Parquet directories, same semantics.
 
 At 100 TB with n_chunks ≈ 10k, each chunk is ~10 GB — large enough to
 amortize job overhead, small enough that a preemption loses minutes.
@@ -23,15 +25,18 @@ amortize job overhead, small enough that a preemption loses minutes.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
 from typing import Callable, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_DIR = "_lineage"
+# committed records only: _append_lineage writes ``<name>.tmp`` first
+LINEAGE_GLOB = "chunk_*.json"
 
 
 def with_chunk(df: DataFrame, key: str = "url", n_chunks: int = 16) -> DataFrame:
@@ -39,18 +44,21 @@ def with_chunk(df: DataFrame, key: str = "url", n_chunks: int = 16) -> DataFrame
 
 
 def completed_chunks(spark: SparkSession, out_path: str) -> List[int]:
-    path = os.path.join(out_path, LINEAGE_DIR)
-    if not os.path.exists(path):
-        return []
-    rows = spark.read.json(path).select("chunk").distinct().collect()
-    return sorted(r["chunk"] for r in rows)
+    """Chunks with a committed lineage record, read from the local record
+    files (no Spark job)."""
+    chunks = set()
+    for fname in glob.glob(os.path.join(out_path, LINEAGE_DIR, LINEAGE_GLOB)):
+        with open(fname) as f:
+            chunks.add(int(json.load(f)["chunk"]))
+    return sorted(chunks)
 
 
 def lineage_df(spark: SparkSession, out_path: str) -> Optional[DataFrame]:
-    path = os.path.join(out_path, LINEAGE_DIR)
-    if not os.path.exists(path):
+    if not completed_chunks(spark, out_path):
         return None
-    return spark.read.json(path)
+    return spark.read.option("pathGlobFilter", LINEAGE_GLOB).json(
+        os.path.join(out_path, LINEAGE_DIR)
+    )
 
 
 def _append_lineage(out_path: str, record: dict) -> None:
@@ -92,52 +100,58 @@ def run_checkpointed(
     """Process ``pages`` chunk-group by chunk-group, atomically committing
     output + lineage per group; safe to kill and re-invoke. Returns the
     list of chunks processed THIS call (already-complete ones are skipped
-    via the lineage anti-join).
+    via their lineage records).
 
-    ``process`` maps a pages-DataFrame to an output DataFrame that retains
-    the ``chunk`` column (e.g. the extraction pipeline).
+    ``process`` maps a subset of ``pages`` (same schema) to output rows
+    that keep ``key`` and carry ``pred_triples`` (e.g. the extraction
+    pipeline). It knows nothing of chunks: ``chunk`` is stamped on its
+    output here, from ``key``, overwriting any ``chunk`` it attached.
+
+    Each group is one write, and its lineage numbers come from that write
+    (n_rows/n_triples via an ``Observation``); n_docs comes from one
+    per-chunk page count taken before the first group.
     """
     chunked = with_chunk(pages, key=key, n_chunks=n_chunks)
     done = set(completed_chunks(spark, out_path))
     todo = [c for c in range(n_chunks) if c not in done]
     _clean_uncommitted(out_path, todo)
+    if not todo:
+        return []
+    counts = chunked.filter(F.col("chunk").isin(todo)).groupBy("chunk").count()
+    n_docs = {int(r["chunk"]): r["count"] for r in counts.collect()}
     processed: List[int] = []
     for i in range(0, len(todo), chunks_per_job):
         group = todo[i : i + chunks_per_job]
         t0 = time.time()
-        subset = chunked.filter(F.col("chunk").isin(group))
-        n_docs = subset.count()
-        out = process(subset)
-        out.write.mode("append").partitionBy("chunk").parquet(
-            os.path.join(out_path, "data")
-        )
+        subset = chunked.filter(F.col("chunk").isin(group)).drop("chunk")
+        out = with_chunk(process(subset), key=key, n_chunks=n_chunks)
+        obs = Observation()
+        per_chunk = []
+        for c in group:
+            in_c = F.col("chunk") == c
+            per_chunk += [
+                F.count_if(in_c).alias(f"n_rows_{c}"),
+                F.sum(F.when(in_c, F.size("pred_triples"))).alias(f"n_triples_{c}"),
+            ]
+        out.observe(obs, *per_chunk).write.mode("append").partitionBy(
+            "chunk"
+        ).parquet(os.path.join(out_path, "data"))
+        stats = obs.get
         wall = time.time() - t0
-        stats = (
-            spark.read.parquet(os.path.join(out_path, "data"))
-            .filter(F.col("chunk").isin(group))
-            .groupBy("chunk")
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.sum(F.size("pred_triples")).alias("n_triples"),
-            )
-            .collect()
-        )
-        per_chunk_docs = n_docs / max(len(group), 1)
-        by_chunk = {int(row["chunk"]): row for row in stats}
+        group_docs = sum(n_docs.get(c, 0) for c in group)
         # every chunk in the group gets a record — an empty chunk (no rows
         # hashed into it) is COMPLETE, not pending, or resume would rescan
         # it on every invocation
         for c in group:
-            row = by_chunk.get(c)
             _append_lineage(
                 out_path,
                 {
                     "chunk": c,
-                    "n_docs": int(per_chunk_docs),
-                    "n_rows": int(row["n_rows"]) if row else 0,
-                    "n_triples": int(row["n_triples"] or 0) if row else 0,
+                    "n_docs": n_docs.get(c, 0),
+                    "n_rows": int(stats[f"n_rows_{c}"]),
+                    "n_triples": int(stats[f"n_triples_{c}"] or 0),
                     "wall_s": round(wall, 3),
-                    "docs_per_s": round(n_docs / wall, 3) if wall > 0 else None,
+                    "docs_per_s": round(group_docs / wall, 3) if wall > 0 else None,
                     "finished_ts": time.time(),
                 },
             )

@@ -82,13 +82,12 @@ def spread_for_compute(docs: DataFrame, factor: int = 1) -> DataFrame:
     track CORES, not input bytes: a single small parquet file splits into
     1-2 scan tasks (one row group = one task) and serializes the hash
     work on one core, and AQE coalesces byte-light shuffles the same way.
-    Same policy and probe as ``pipeline._declared_partitions`` for the
-    compute-bound decode stage: read the physical plan's DECLARED output
-    partitioning — a pure plan-analysis probe, no ``df.rdd`` (which walks
-    file listings and can execute stages under AQE), no job. Scans report
-    unknown (0) and get the balancing repartition — the safe default when
-    the downstream stage is compute-dominant, and the shuffle moves only
-    the rows this stage was going to read anyway, exactly once."""
+    The check reads the physical plan's DECLARED output partitioning — a
+    pure plan-analysis probe, no ``df.rdd`` (which walks file listings and
+    can execute stages under AQE), no job. Scans report unknown (0) and
+    get the balancing repartition — the safe default when the downstream
+    stage is compute-dominant, and the shuffle moves only the rows this
+    stage was going to read anyway, exactly once."""
     spark = docs.sparkSession
     target = spark.sparkContext.defaultParallelism * factor
     try:

@@ -22,9 +22,9 @@ Scale design (100 TB / 1000 executors):
   state — so output is invariant to partitioning (the two-cluster-size
   determinism invariant) and the stage scales linearly until the scan or
   the downstream canonicalize shuffle dominates.
-* ``repartition`` before the generation stage balances compute (decode
-  cost is proportional to document length, not row count); callers at
-  cluster scale should pass ``partitions ≈ 2-3 × total cores``.
+* ``repartition`` to 2× default parallelism before the generation stage
+  balances compute (decode cost is proportional to document length, not
+  row count).
 * Per-executor init (trie unpack, scorer construction) happens once per
   Python worker via a module-level cache keyed by broadcast id — the same
   trick as the reference's once-per-run tag-id precompute
@@ -404,20 +404,6 @@ class GenieExtractor:
         return df.mapInPandas(score, out_schema)
 
 
-def _declared_partitions(df: DataFrame) -> int:
-    """Partition count the physical plan DECLARES, without building the
-    RDD chain (``df.rdd`` on a 100-TB plan walks file listings and
-    disables AQE) and without running a job. Explicit repartitions /
-    exchanges report their count; scans and local relations report 0
-    (unknown partitioning)."""
-    try:
-        return int(
-            df._jdf.queryExecution().sparkPlan().outputPartitioning().numPartitions()
-        )
-    except Exception:  # non-classic backends: treat as unknown
-        return 0
-
-
 def extract_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -425,7 +411,6 @@ def extract_pipeline(
     rel_names: List[str],
     lang: Optional[str] = "en",
     num_beams: int = 2,
-    partitions: Optional[int] = None,
     extractor: Optional[GenieExtractor] = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang, …) → one row per sentence with
@@ -433,31 +418,21 @@ def extract_pipeline(
     pred_triples).
 
     Plan shape: scan → lang filter (pushed to the parquet/Iceberg scan by
-    Catalyst) → JVM-side sentence split (no Python) → repartition to
-    saturate cores → mapInPandas generation → JVM-side parse.
-
-    ``partitions``: None (default) auto-repartitions to 2× the cluster's
-    default parallelism unless the plan already carries a partitioning of
-    at least that size — the generation stage is compute-bound, so
-    inheriting a small file count single-threads the decode (measured: a
-    1-partition scan pinned throughput at one worker regardless of
-    local[8] vs local[32]). The check reads the physical plan's declared
-    output partitioning (a pure plan-analysis probe: no ``df.rdd``, no
-    file listing, no Spark job); scans report "unknown" and get the
-    balancing repartition — the safe default for a compute-dominant
-    stage. Pass an explicit count to override, or 0 to keep the scan
-    partitioning.
+    Catalyst) → JVM-side sentence split (no Python) → hash repartition on
+    (url, sent_idx) to 2× the cluster's default parallelism → mapInPandas
+    generation → JVM-side parse. The repartition is unconditional: the
+    generation stage is compute-bound, so inheriting a small file count
+    single-threads the decode (measured: a 1-partition scan pinned
+    throughput at one worker regardless of local[8] vs local[32]).
     """
     if lang is not None:
         pages = pages.filter(F.col("lang") == lang)
     sents = sentences_df(pages, text_col="text").select(
         "url", "warc_ts", "sent_idx", "input"
     )
-    if partitions is None:
-        want = spark.sparkContext.defaultParallelism * 2
-        partitions = 0 if _declared_partitions(sents) >= want else want
-    if partitions:
-        # balance decode compute, not bytes: hash on (url, sent_idx)
-        sents = sents.repartition(partitions, "url", "sent_idx")
+    # balance decode compute, not bytes
+    sents = sents.repartition(
+        spark.sparkContext.defaultParallelism * 2, "url", "sent_idx"
+    )
     ex = extractor or GenieExtractor(spark, ent_names, rel_names, num_beams=num_beams)
     return ex.transform(sents)

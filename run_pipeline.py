@@ -16,9 +16,11 @@ Sandbox launch (local mode, used by the scaling evidence run):
 Stages (all resumable — re-invoking skips chunks recorded in the lineage
 table): read pages(url, warc_ts, html, text, lang) → lang filter →
 sentence split → constrained beam generation (mapInPandas, broadcast
-tries) → per-chunk checkpointed parquet/Iceberg append with lineage +
-throughput metrics → canonicalize (broadcast joins, skew-aware dedup) →
-graph table partitioned by predicate.
+tries) → checkpointed parquet append, one write per chunk group, with
+per-chunk lineage + throughput metrics → canonicalize (broadcast joins,
+skew-aware dedup) → graph table partitioned by predicate. The extraction
+step knows nothing of chunks: ``checkpoint.run_checkpointed`` assigns
+them from ``--n-chunks`` and commits each group.
 
 The entity/relation catalogs come from --ent-catalog/--rel-catalog parquet
 dirs (columns: id, name, provenance) or, absent those, are derived
@@ -220,19 +222,10 @@ def main():
         hf_checkpoint=args.hf_checkpoint, hf_device=args.hf_device,
     )
 
-    def process(chunked_pages: DataFrame) -> DataFrame:
-        out = extract_pipeline(
-            spark,
-            chunked_pages,
-            ents,
-            rels,
-            lang=args.lang,
-            extractor=extractor,
+    def process(pages_subset: DataFrame) -> DataFrame:
+        return extract_pipeline(
+            spark, pages_subset, ents, rels, lang=args.lang, extractor=extractor
         )
-        # re-attach chunk for the partitioned checkpoint write
-        from genie_spark.checkpoint import with_chunk
-
-        return with_chunk(out, key="url", n_chunks=args.n_chunks)
 
     extract_out = os.path.join(args.output, "extracted")
     processed = run_checkpointed(

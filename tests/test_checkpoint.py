@@ -23,9 +23,7 @@ def process(spark):
     rels = sorted(synth.RELATIONS)
 
     def fn(pages):
-        out = extract_pipeline(spark, pages, ents, rels)
-        chunks = with_chunk(pages.select("url"), n_chunks=N_CHUNKS)
-        return out.join(chunks, "url")
+        return extract_pipeline(spark, pages, ents, rels)
 
     return fn
 
@@ -106,7 +104,7 @@ def test_orphaned_data_rolled_back_on_resume(spark, process, tmp_path):
 
     # simulate the crash: write one chunk's data WITHOUT its lineage record
     chunked = with_chunk(pages, n_chunks=N_CHUNKS)
-    orphan = process(chunked.filter(F.col("chunk") == 0))
+    orphan = with_chunk(process(chunked.filter(F.col("chunk") == 0)), n_chunks=N_CHUNKS)
     orphan.write.mode("append").partitionBy("chunk").parquet(
         os.path.join(out, "data")
     )
@@ -119,3 +117,127 @@ def test_orphaned_data_rolled_back_on_resume(spark, process, tmp_path):
     n = got.count()
     n_distinct = got.select("url", "sent_idx").distinct().count()
     assert n == n_distinct, f"orphaned chunk data duplicated: {n} vs {n_distinct}"
+
+
+def _dup_keys(data):
+    return data.groupBy("url", "sent_idx").count().filter(F.col("count") > 1).count()
+
+
+def test_lineage_tmp_files_are_not_commits(spark, process, tmp_path):
+    """A crash inside _append_lineage leaves ``chunk_<k>.json.tmp`` —
+    truncated, or complete but never renamed — beside the chunk's data.
+    Neither is a commit: resume must redo both chunks, exactly once."""
+    import os
+
+    out = str(tmp_path / "graph_out")
+    pages = synth.pages_df(spark, N_PAGES).cache()
+    run_checkpointed(
+        spark, pages, process, out, n_chunks=N_CHUNKS, chunks_per_job=N_CHUNKS
+    )
+    n_rows = spark.read.parquet(os.path.join(out, "data")).count()
+    lin = os.path.join(out, "_lineage")
+    for c in (1, 4):
+        assert os.path.exists(os.path.join(out, "data", f"chunk={c}"))
+    record = open(os.path.join(lin, "chunk_1.json")).read()
+    os.remove(os.path.join(lin, "chunk_1.json"))
+    with open(os.path.join(lin, "chunk_1.json.tmp"), "w") as f:
+        f.write(record[: len(record) // 2])
+    os.replace(os.path.join(lin, "chunk_4.json"), os.path.join(lin, "chunk_4.json.tmp"))
+    assert completed_chunks(spark, out) == [0, 2, 3, 5]
+    assert lineage_df(spark, out).count() == N_CHUNKS - 2
+
+    done = run_checkpointed(
+        spark, pages, process, out, n_chunks=N_CHUNKS, chunks_per_job=N_CHUNKS
+    )
+    assert sorted(done) == [1, 4]
+    data = spark.read.parquet(os.path.join(out, "data"))
+    assert _dup_keys(data) == 0
+    assert data.count() == n_rows
+    assert completed_chunks(spark, out) == list(range(N_CHUNKS))
+
+
+def test_lineage_counts_are_per_chunk(spark, process, tmp_path):
+    """Each record carries its own chunk's page count (not a group
+    average), and n_rows/n_triples match the rows written under it. With
+    more chunks than pages some chunks are empty; they still commit, at 0."""
+    import os
+
+    n_chunks = 40
+    out = str(tmp_path / "graph_out")
+    pages = synth.pages_df(spark, N_PAGES).cache()
+    run_checkpointed(spark, pages, process, out, n_chunks=n_chunks, chunks_per_job=16)
+
+    per_chunk = with_chunk(pages, n_chunks=n_chunks).groupBy("chunk").count()
+    want_docs = {r["chunk"]: r["count"] for r in per_chunk.collect()}
+    data = spark.read.parquet(os.path.join(out, "data"))
+    written = {
+        r["chunk"]: (r["n"], r["t"])
+        for r in data.groupBy("chunk")
+        .agg(F.count("*").alias("n"), F.sum(F.size("pred_triples")).alias("t"))
+        .collect()
+    }
+    recs = {r["chunk"]: r for r in lineage_df(spark, out).collect()}
+    assert sorted(recs) == list(range(n_chunks))
+    for c, r in recs.items():
+        assert r["n_docs"] == want_docs.get(c, 0), c
+        assert (r["n_rows"], r["n_triples"]) == written.get(c, (0, 0)), c
+    assert sum(r["n_docs"] for r in recs.values()) == N_PAGES
+    assert any(r["n_docs"] == 0 for r in recs.values())
+
+
+@pytest.mark.parametrize("stamp", [None, N_CHUNKS + 3])
+def test_run_checkpointed_owns_chunk_column(spark, process, tmp_path, stamp):
+    """``process`` may return no ``chunk`` column, or one derived with a
+    different n_chunks; either way every row lands under the chunk
+    run_checkpointed assigned it."""
+    import os
+
+    fn = process if stamp is None else (
+        lambda pages: with_chunk(process(pages), n_chunks=stamp)
+    )
+    out = str(tmp_path / "graph_out")
+    pages = synth.pages_df(spark, N_PAGES).cache()
+    run_checkpointed(spark, pages, fn, out, n_chunks=N_CHUNKS, chunks_per_job=3)
+
+    data = spark.read.parquet(os.path.join(out, "data"))
+    assert data.count() > 0 and _dup_keys(data) == 0
+    want = F.pmod(F.xxhash64("url"), F.lit(N_CHUNKS))
+    assert data.filter(F.col("chunk") != want).count() == 0
+    assert data.count() == lineage_df(spark, out).agg(F.sum("n_rows")).first()[0]
+
+
+def test_group_with_no_extractable_pages_commits_empty(spark, process, tmp_path):
+    """Pages that are all filtered out by the lang filter still commit
+    their chunks, with n_rows == 0, instead of waiting forever on the
+    write's observed metrics."""
+    out = str(tmp_path / "graph_out")
+    pages = synth.pages_df(spark, N_PAGES).withColumn("lang", F.lit("de"))
+    done = run_checkpointed(
+        spark, pages, process, out, n_chunks=N_CHUNKS, chunks_per_job=3
+    )
+    assert done == list(range(N_CHUNKS))
+    recs = lineage_df(spark, out).collect()
+    assert all(r["n_rows"] == 0 and r["n_triples"] == 0 for r in recs)
+    assert sum(r["n_docs"] for r in recs) == N_PAGES
+
+
+def test_group_commit_job_budget(spark, process, tmp_path):
+    """G chunk groups fire at most 2G + 2 Spark jobs: one page count up
+    front, then each group's extraction write — no per-group count and
+    no read-back of the output."""
+    out = str(tmp_path / "graph_out")
+    pages = synth.pages_df(spark, N_PAGES).cache()
+    pages.count()
+    n_groups = 3
+    sc = spark.sparkContext
+    sc.setJobGroup("checkpoint-job-budget", "run_checkpointed job budget")
+    try:
+        run_checkpointed(
+            spark, pages, process, out,
+            n_chunks=N_CHUNKS, chunks_per_job=N_CHUNKS // n_groups,
+        )
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("checkpoint-job-budget")
+    assert 0 < len(jobs) <= 2 * n_groups + 2, len(jobs)

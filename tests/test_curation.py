@@ -132,7 +132,8 @@ def test_streaming_decontaminate(spark, tmp_path):
 def test_run_pipeline_e2e_with_curation(spark, tmp_path):
     """Full CLI run over sf0.001 docs with the cascade enabled: the
     pipeline must complete, write a graph, and report the curation
-    block. Runs in-process (run_pipeline.main); getOrCreate reuses the
+    block; a second run on the same output resumes as a no-op. Runs
+    in-process (run_pipeline.main); getOrCreate reuses the
     test session, so its stop() is neutered for the duration."""
     import sys
     from unittest import mock
@@ -151,12 +152,17 @@ def test_run_pipeline_e2e_with_curation(spark, tmp_path):
         "--n-chunks", "4",
         "--dedup-url", "--quality-gate", "--line-dedup",
     ]
-    printed = []
-    with mock.patch.object(sys, "argv", argv), \
-            mock.patch.object(SparkSession, "stop", lambda self: None), \
-            mock.patch("builtins.print", lambda *a, **k: printed.append(a)):
-        run_pipeline.main()
-    summary = json.loads(printed[-1][0])
+
+    def run():
+        printed = []
+        with mock.patch.object(sys, "argv", argv), \
+                mock.patch.object(SparkSession, "stop", lambda self: None), \
+                mock.patch("builtins.print", lambda *a, **k: printed.append(a)):
+            run_pipeline.main()
+        return json.loads(printed[-1][0])
+
+    summary = run()
+    assert summary["chunks_processed_this_run"] == [0, 1, 2, 3]
     assert summary["graph_triples"] > 0
     assert summary["curation"] == {
         "dedup_url": True, "decontaminate": False, "quality_gate": True,
@@ -164,6 +170,11 @@ def test_run_pipeline_e2e_with_curation(spark, tmp_path):
         "strip_boilerplate": False,
     }
     assert os.path.exists(os.path.join(out_dir, "graph"))
+    # re-invoking on the same --output resumes: every chunk is committed,
+    # so nothing is extracted again and the graph is unchanged
+    again = run()
+    assert again["chunks_processed_this_run"] == []
+    assert again["graph_triples"] == summary["graph_triples"]
 
 
 def test_curate_pages_neardup_cc_collapses_chains(spark):

@@ -143,7 +143,7 @@ def test_free_pipeline_matches_driver_twin_and_partition_invariant(spark):
     out = extract_pipeline(spark, pages, [], [], extractor=ex)
     got = {(r["url"], r["sent_idx"]): r for r in out.collect()}
 
-    from genie_spark.extract import split_sentences
+    from genie_spark.extract import sentences_df, split_sentences
 
     tok = WordTokenizer(ents + rels)
     codes = TagCodes(tok)
@@ -165,7 +165,12 @@ def test_free_pipeline_matches_driver_twin_and_partition_invariant(spark):
             n += 1
     assert n > 10
 
-    rep = extract_pipeline(spark, pages.repartition(13), [], [], extractor=ex)
+    # extract_pipeline always repartitions before decode; run the decode
+    # stage itself over a different partition count
+    sents = sentences_df(pages.filter(pages["lang"] == "en")).select(
+        "url", "warc_ts", "sent_idx", "input"
+    )
+    rep = ex.transform(sents.repartition(13))
     assert sorted(
         (r["url"], r["sent_idx"], r["prediction"]) for r in rep.collect()
     ) == sorted((u, i, r["prediction"]) for (u, i), r in got.items())

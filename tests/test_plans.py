@@ -131,9 +131,9 @@ def _jobs_run(spark) -> int:
 
 def test_plan_build_fires_no_jobs(spark):
     """Plan construction must be pure plan analysis: with ``dim`` supplied,
-    the LSH/near-dup builders probe nothing, and extract_pipeline's
-    partition check reads the physical plan instead of df.rdd — no Spark
-    job may fire before the action."""
+    the LSH/near-dup builders probe nothing, and extract_pipeline sizes
+    its decode repartition from defaultParallelism alone — no Spark job
+    may fire before the action."""
     import __spark_entry__ as entry_mod
     from genie_spark.datapipe.dedup import embedding_neardup_lsh_pairs
     from genie_spark.datapipe.similarity import bucketed_embeddings

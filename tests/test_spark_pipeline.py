@@ -117,17 +117,26 @@ def test_pipeline_matches_driver_oracle(spark, pages, catalogs):
     assert n_checked > 20
 
 
+def _decode_input(pages):
+    """extract_pipeline's sentence frame, before its decode repartition."""
+    return sentences_df(pages.filter(F.col("lang") == "en")).select(
+        "url", "warc_ts", "sent_idx", "input"
+    )
+
+
 def test_pipeline_partition_invariance(spark, pages, catalogs):
     """Same rows regardless of parallelism — the two-cluster-size
-    determinism invariant at sandbox scale."""
+    determinism invariant at sandbox scale. extract_pipeline always
+    repartitions before decode, so the decode stage is also run directly
+    over 1 and 13 partitions."""
     ents, rels = catalogs
-    a = extract_pipeline(spark, pages.repartition(1), ents, rels).select(
-        "url", "sent_idx", "prediction"
+    ex = GenieExtractor(spark, ents, rels, num_beams=2)
+    rows = lambda df: sorted(
+        map(tuple, df.select("url", "sent_idx", "prediction").collect())
     )
-    b = extract_pipeline(spark, pages.repartition(13), ents, rels).select(
-        "url", "sent_idx", "prediction"
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    base = rows(extract_pipeline(spark, pages, ents, rels))
+    for n in (1, 13):
+        assert rows(ex.transform(_decode_input(pages).repartition(n))) == base
 
 
 def test_extraction_recovers_gold_facts(spark, pages, catalogs):
@@ -448,16 +457,15 @@ def test_pipeline_partition_invariance_with_decode_knobs(spark):
     pages = synth.pages_df(spark, 16)
     ex = GenieExtractor(spark, ents, rels, num_beams=2,
                         length_penalty=1.0, bos_first=True)
-    a = extract_pipeline(spark, pages, [], [], extractor=ex, partitions=2)
-    b = extract_pipeline(spark, pages.repartition(13), [], [], extractor=ex,
-                         partitions=7)
     key = lambda df: sorted(
         (r["url"], r["sent_idx"], r["prediction"],
          tuple((x["text"], x["log_prob"]) for x in r["beams"]))
         for r in df.collect()
     )
-    ka, kb = key(a), key(b)
-    assert ka == kb and len(ka) > 0
+    ka = key(extract_pipeline(spark, pages, [], [], extractor=ex))
+    for n in (2, 7):
+        assert key(ex.transform(_decode_input(pages).repartition(n))) == ka
+    assert len(ka) > 0
     for _, _, pred, beams in ka:
         if pred is not None:
             for s, r, o in parse_linearization(pred):
