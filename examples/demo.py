@@ -7,7 +7,8 @@ schema, run constrained generation over ad-hoc sentences with a beam
 width larger than the returned count, and map surface forms to
 catalog ids (and back, with unmapped statuses). Everything runs
 sandbox-local with the deterministic scorer; on a cluster pass
-``hf_checkpoint=...`` to GenieExtractor for the transformer path.
+``stack_factory=partial(hf_stack_factory, checkpoint=...)`` to
+GenieExtractor for the transformer path.
 
     python examples/demo.py
 """
@@ -49,7 +50,7 @@ def main(spark: SparkSession = None) -> None:
         spark.sparkContext.setLogLevel("ERROR")
 
     # 1. Build + persist the schema tries once (notebook: get_trie_from_strings)
-    from genie_spark.pipeline import GenieExtractor, save_trie_artifacts
+    from genie_spark.pipeline import GenieExtractor, load_trie_artifacts, save_trie_artifacts
 
     trie_dir = tempfile.mkdtemp(prefix="genie_demo_tries_")
     ent_path = os.path.join(trie_dir, "entity_trie")
@@ -59,11 +60,10 @@ def main(spark: SparkSession = None) -> None:
 
     # 2. Constrained generation over ad-hoc sentences (notebook:
     # model.sample with num_beams=10, num_return_sequences=2)
+    ents, rels, stack_factory = load_trie_artifacts(ent_path, rel_path)
     extractor = GenieExtractor(
-        spark,
-        trie_artifacts=(ent_path, rel_path),
-        num_beams=10,
-        num_return_sequences=2,
+        spark, ents, rels, stack_factory=stack_factory,
+        num_beams=10, num_return_sequences=2,
     )
     df = spark.createDataFrame([(s,) for s in SENTENCES], ["input"])
     out = extractor.transform(df).cache()

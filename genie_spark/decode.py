@@ -236,9 +236,9 @@ class UniformScorer:
     the output is determined purely by the grammar + tries + beam-search
     tiebreak (lowest token id first). Useful as a baseline separating
     what the CONSTRAINTS contribute from what the model contributes —
-    and, being a distinct module-level class, as the picklable
-    scorer_factory the pipeline tests inject to prove scorer selection
-    reaches executors."""
+    and, being a distinct module-level class, as the picklable scorer the
+    pipeline tests bind into ``default_stack_factory`` to prove scorer
+    selection reaches executors."""
 
     def __init__(self, tokenizer=None):
         self.tok = tokenizer

@@ -33,13 +33,11 @@ Row = Tuple[str, int, Optional[str], Optional[str], Optional[str]]
 def _twin_stack(sf_dir: str):
     """Shared single-process context: docs + the decode stack built over
     the corpus-derived catalog (twin of __spark_entry__._corpus_catalogs
-    feeding pipeline._worker_setup)."""
+    feeding pipeline._worker_setup, through the same default stack
+    factory)."""
     import duckdb
 
-    from .constraints import TagCodes
-    from .decode import DeterministicScorer
-    from .tokenizer import WordTokenizer
-    from .trie import trie_from_names
+    from .pipeline import default_stack_factory
 
     docs = duckdb.sql(
         "SELECT doc_id, text, lang, source FROM read_parquet('"
@@ -50,10 +48,7 @@ def _twin_stack(sf_dir: str):
     words = sorted({w for (_, t, _, _) in docs for w in t.split(" ") if len(w) >= 3})
     ents = sorted({w for w in words if len(w) >= 4})
     rels = sorted({w for w in words if len(w) == 3})
-    tok = WordTokenizer(ents + rels)
-    codes = TagCodes(tok)
-    ent_t, rel_t = trie_from_names(ents, tok), trie_from_names(rels, tok)
-    return docs, tok, codes, ent_t, rel_t, DeterministicScorer(tok)
+    return (docs, *default_stack_factory({"ent_names": ents, "rel_names": rels}))
 
 
 # oracle_sql() may be invoked repeatedly (per-query drivers); the twin

@@ -11,13 +11,15 @@ Python" at the API boundary).
 
 Scale design (100 TB / 1000 executors):
 
-* The tokenizer vocabulary and both tries are built ONCE on the driver
-  from the (small) catalog dimension tables, then shipped with
-  ``sc.broadcast`` — one copy per executor JVM, handed to each reused
-  Python worker on first use (reference loads the pickled trie per process:
-  genie/models/genie_base_pl.py:92-94). The FlatTrie is three numpy arrays
-  (CSR), so the large-schema ~6M-name trie broadcasts as a few hundred MB
-  instead of a multi-GB nested dict.
+* The broadcast (``sc.broadcast``, one copy per executor JVM) carries
+  the sorted entity/relation names and one picklable stack factory, not
+  the built stack. Each reused Python worker builds the tokenizer and both
+  tries from those names on first use (reference loads the pickled trie
+  per process: genie/models/genie_base_pl.py:92-94); names compress well
+  and the build is deterministic. With preloaded S10 artifacts
+  (:func:`load_trie_artifacts`) the factory itself carries the FlatTrie
+  CSR arrays, so the ~6M-name trie ships as a few hundred MB of numpy
+  buffers and workers skip the build.
 * Generation is embarrassingly parallel per sentence — no cross-row
   state — so output is invariant to partitioning (the two-cluster-size
   determinism invariant) and the stage scales linearly until the scan or
@@ -25,14 +27,18 @@ Scale design (100 TB / 1000 executors):
 * ``repartition`` to 2× default parallelism before the generation stage
   balances compute (decode cost is proportional to document length, not
   row count).
-* Per-executor init (trie unpack, scorer construction) happens once per
-  Python worker via a module-level cache keyed by broadcast id — the same
-  trick as the reference's once-per-run tag-id precompute
-  (ie_prefix_constraints.py:94-134), not once per batch.
+* Per-executor init (trie build, scorer construction) happens once per
+  Python worker via a module-level cache keyed by content: the name
+  counts, an md5 over the full catalog and an md5 of the pickled stack
+  factory — the same trick as the reference's once-per-run tag-id
+  precompute (ie_prefix_constraints.py:94-134), not once per batch.
 """
 
 from __future__ import annotations
 
+import hashlib
+import pickle
+from functools import partial
 from typing import Iterator, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,7 +55,7 @@ from .constraints import TagCodes
 from .decode import DeterministicScorer, generate_for_text, top_valid_prediction
 from .extract import sentences_df
 from .tokenizer import WordTokenizer
-from .trie import trie_from_names
+from .trie import FlatTrie, trie_from_names
 from .triples import parse_triples_col
 
 BEAM_SCHEMA = ArrayType(
@@ -61,50 +67,43 @@ BEAM_SCHEMA = ArrayType(
     )
 )
 
-# per-Python-worker cache: broadcast id → (tokenizer, codes, ent_trie,
+# per-Python-worker cache: cache_key → (tokenizer, codes, ent_trie,
 # rel_trie, scorer). Survives across tasks when spark.python.worker.reuse
 # is on (default), so the decode machinery is built once per worker.
 _WORKER_CACHE: dict = {}
 
 
-def default_stack_factory(payload: dict):
+def default_stack_factory(payload: dict, scorer=DeterministicScorer, tries=None):
     """Build the decode stack in WordTokenizer space (the sandbox/oracle
-    path). ``payload["scorer_factory"]``, when present, is a picklable
-    ``tokenizer -> scorer`` callable replacing DeterministicScorer — the
-    pluggable-scorer seam (reference analog: the model object handed to
-    evaluate.py:35-66 is the scorer)."""
+    path). ``scorer`` is a ``tokenizer -> scorer`` callable — bind another
+    one with ``functools.partial`` (reference analog: the model object
+    handed to evaluate.py:35-66 is the scorer). ``tries`` is a preloaded
+    (entity, relation) FlatTrie pair built over the same names
+    (:func:`load_trie_artifacts`), so workers skip the trie build."""
     tok = WordTokenizer(payload["ent_names"] + payload["rel_names"])
-    codes = TagCodes(tok)
-    if "ent_trie" in payload:
-        # preloaded artifact: the broadcast carries the CSR arrays directly
-        from .trie import FlatTrie
-
-        ent = FlatTrie(*payload["ent_trie"])
-        rel = FlatTrie(*payload["rel_trie"])
-    else:
-        ent = trie_from_names(payload["ent_names"], tok)
-        rel = trie_from_names(payload["rel_names"], tok)
-    make_scorer = payload.get("scorer_factory")
-    scorer = make_scorer(tok) if make_scorer else DeterministicScorer(tok)
-    return tok, codes, ent, rel, scorer
+    if tries is None:
+        tries = (
+            trie_from_names(payload["ent_names"], tok),
+            trie_from_names(payload["rel_names"], tok),
+        )
+    return (tok, TagCodes(tok), *tries, scorer(tok))
 
 
-def hf_stack_factory(payload: dict):
+def hf_stack_factory(payload: dict, checkpoint: str, device: str = "cuda"):
     """Build the decode stack in the HF checkpoint's OWN id space — the
     production path (reference flagship: model.sample,
     genie_base_pl.py:435-555, with tag ids derived from the model's BART
     tokenizer, ie_prefix_constraints.py:94-131). The tokenizer adapter
     derives TagCodes from the checkpoint's tokenizer and the tries are
     re-encoded through it, so constraint masks, beam tokens, and
-    decoder_input_ids all live in one id space. Raises in this sandbox
-    (no torch/transformers) — the wiring is exercised by the fake-BPE
-    adapter tests."""
+    decoder_input_ids all live in one id space. Ship it as
+    ``partial(hf_stack_factory, checkpoint=..., device=...)``. Raises
+    NotImplementedError without torch/transformers — the wiring is
+    exercised by the fake-BPE adapter tests."""
     from .decode import HFSeq2SeqScorer
     from .hf_adapter import HFTokenizerAdapter
 
-    scorer = HFSeq2SeqScorer(
-        payload["hf_checkpoint"], device=payload.get("hf_device", "cuda")
-    )
+    scorer = HFSeq2SeqScorer(checkpoint, device=device)
     tok = HFTokenizerAdapter(scorer.tokenizer)
     codes = TagCodes(tok)
     ent = trie_from_names(payload["ent_names"], tok)
@@ -117,8 +116,7 @@ def _worker_setup(payload: dict):
     hit = _WORKER_CACHE.get(key)
     if hit is not None:
         return hit
-    factory = payload.get("stack_factory") or default_stack_factory
-    stack = factory(payload)
+    stack = payload["stack_factory"](payload)
     _WORKER_CACHE.clear()  # one active schema per worker; avoid leaks
     _WORKER_CACHE[key] = stack
     return _WORKER_CACHE[key]
@@ -134,13 +132,27 @@ def save_trie_artifacts(
     companion original-strings jsonl) as reloadable artifacts. Both tries
     MUST be saved together: token ids come from the tokenizer built over
     the ent+rel name union, so artifacts from different unions cannot be
-    mixed — GenieExtractor(trie_artifacts=...) reloads the pair and
-    rebuilds that same tokenizer from the companion names."""
+    mixed — :func:`load_trie_artifacts` reloads the pair and workers
+    rebuild that same tokenizer from the companion names."""
     ents = sorted(set(ent_names))
     rels = sorted(set(rel_names))
     tok = WordTokenizer(ents + rels)
     trie_from_names(ents, tok).save(ent_path, names=ents)
     trie_from_names(rels, tok).save(rel_path, names=rels)
+
+
+def load_trie_artifacts(ent_path: str, rel_path: str):
+    """Reload a :func:`save_trie_artifacts` pair →
+    ``(ent_names, rel_names, stack_factory)``. The names come from the
+    companion jsonl; the factory carries the CSR arrays in the broadcast,
+    so workers skip the trie build. Pass all three to GenieExtractor, and
+    canonicalize against the same names."""
+    tries = (FlatTrie.load(ent_path), FlatTrie.load(rel_path))
+    return (
+        FlatTrie.load_names(ent_path),
+        FlatTrie.load_names(rel_path),
+        partial(default_stack_factory, tries=tries),
+    )
 
 
 class GenieExtractor:
@@ -156,18 +168,14 @@ class GenieExtractor:
     def __init__(
         self,
         spark: SparkSession,
-        ent_names: Optional[List[str]] = None,
-        rel_names: Optional[List[str]] = None,
+        ent_names: List[str],
+        rel_names: List[str],
         num_beams: int = 2,
         max_length: int = 96,
         length_penalty: float = 0.0,
         bos_first: bool = False,
         num_return_sequences: Optional[int] = None,
-        trie_artifacts: Optional[tuple] = None,
-        scorer_factory=None,
-        hf_checkpoint: Optional[str] = None,
-        hf_device: str = "cuda",
-        stack_factory=None,
+        stack_factory=default_stack_factory,
         constrained: bool = True,
     ):
         """``constrained=False`` switches to FREE generation — the
@@ -179,25 +187,26 @@ class GenieExtractor:
         so output need not be well-formed and names need not be catalog
         entries.
 
-        Scorer selection (executor-side, shipped via the broadcast):
+        ``stack_factory`` is the one way to choose the decode stack: a
+        picklable ``payload -> (tok, codes, ent_trie, rel_trie, scorer)``
+        callable, built once per executor Python worker from the broadcast
+        names. It must be a module-level function or a
+        ``functools.partial`` of one:
 
-        * default — DeterministicScorer over WordTokenizer (sandbox/oracle
-          path).
-        * ``scorer_factory`` — a picklable ``tokenizer -> scorer``
-          callable built per worker in WordTokenizer space (mock/custom
-          scorers).
-        * ``hf_checkpoint`` — the production path: each worker loads the
-          HF seq2seq checkpoint and builds the WHOLE stack (TagCodes,
-          tries, beams) in that model's tokenizer id space via
-          hf_adapter.HFTokenizerAdapter, matching the reference's
-          model.sample flagship (genie_base_pl.py:435-555). Mutually
-          exclusive with trie_artifacts (artifact token ids are
-          WordTokenizer-space) and scorer_factory.
-        * ``stack_factory`` — full custom control: a picklable
-          ``payload -> (tok, codes, ent_trie, rel_trie, scorer)``
-          callable (e.g. toy_bpe.toy_bpe_stack_factory, the executable
-          reference for the adapter contract). Mutually exclusive with
-          all of the above.
+        * ``default_stack_factory`` (default) — DeterministicScorer over
+          WordTokenizer (the oracle path);
+          ``partial(default_stack_factory, scorer=UniformScorer)`` swaps
+          the scorer.
+        * the factory from :func:`load_trie_artifacts` — preloaded S10
+          tries; pass the names it returns as well.
+        * ``partial(hf_stack_factory, checkpoint=..., device=...)`` — the
+          production path: each worker loads the HF seq2seq checkpoint
+          and builds the WHOLE stack (TagCodes, tries, beams) in that
+          model's tokenizer id space via hf_adapter.HFTokenizerAdapter,
+          matching the reference's model.sample flagship
+          (genie_base_pl.py:435-555).
+        * ``toy_bpe.toy_bpe_stack_factory`` — the executable reference
+          for the HF adapter contract.
         """
         self.num_beams = num_beams
         self.max_length = max_length
@@ -210,75 +219,18 @@ class GenieExtractor:
         self.length_penalty = length_penalty
         self.bos_first = bos_first
         self.constrained = constrained
-        if hf_checkpoint is not None and (
-            trie_artifacts is not None or scorer_factory is not None
-        ):
-            raise ValueError(
-                "hf_checkpoint builds its own tokenizer-space stack; it "
-                "cannot be combined with trie_artifacts or scorer_factory"
-            )
-        if stack_factory is not None and (
-            hf_checkpoint is not None
-            or scorer_factory is not None
-            or trie_artifacts is not None
-        ):
-            raise ValueError(
-                "stack_factory supplies the whole decode stack; it cannot "
-                "be combined with hf_checkpoint / scorer_factory / "
-                "trie_artifacts"
-            )
-        if trie_artifacts is not None:
-            # preloaded S10 artifacts (save_trie_artifacts): names come
-            # from the companion jsonl, the CSR arrays broadcast as-is —
-            # workers skip the trie build entirely
-            from .trie import FlatTrie
-
-            ent_path, rel_path = trie_artifacts
-            ent_names = FlatTrie.load_names(ent_path)
-            rel_names = FlatTrie.load_names(rel_path)
-            et, rt = FlatTrie.load(ent_path), FlatTrie.load(rel_path)
-            extra = {
-                "ent_trie": (et.offsets, et.tokens, et.childs),
-                "rel_trie": (rt.offsets, rt.tokens, rt.childs),
-            }
-        else:
-            extra = {}
-        # Sort for build determinism (reference trie.py:36). The broadcast
-        # carries raw names, not the trie: names compress well, and the
-        # CSR build is cheap and deterministic on each worker.
+        # sort for build determinism (reference trie.py:36)
         payload = {
             "ent_names": sorted(set(ent_names)),
             "rel_names": sorted(set(rel_names)),
-            **extra,
+            "stack_factory": stack_factory,
         }
-        if stack_factory is not None:
-            payload["stack_factory"] = stack_factory
-        elif hf_checkpoint is not None:
-            payload["stack_factory"] = hf_stack_factory
-            payload["hf_checkpoint"] = hf_checkpoint
-            payload["hf_device"] = hf_device
-        elif scorer_factory is not None:
-            payload["scorer_factory"] = scorer_factory
-
-        def _qual(fn):
-            return f"{fn.__module__}.{getattr(fn, '__qualname__', repr(fn))}"
-
-        # the key must separate stacks that share a catalog but differ in
-        # scorer/checkpoint, or worker reuse would serve the wrong scorer
-        stack_id = (
-            (stack_factory and _qual(stack_factory))
-            or hf_checkpoint
-            or (scorer_factory and _qual(scorer_factory))
-            or "default"
-        )
         # Hash the FULL name lists: a catalog refresh that preserves counts
         # and the first-N sorted names must still produce a distinct key, or
         # a reused Python worker would serve stale tries (silent wrong
         # triples). One md5 over the joined byte string is microseconds even
         # at ~6M names, and — unlike Python's salted hash() — stable across
         # driver processes.
-        import hashlib
-
         catalog_digest = hashlib.md5()
         for name in payload["ent_names"]:
             catalog_digest.update(name.encode("utf-8", "surrogatepass"))
@@ -287,6 +239,11 @@ class GenieExtractor:
         for name in payload["rel_names"]:
             catalog_digest.update(name.encode("utf-8", "surrogatepass"))
             catalog_digest.update(b"\x1f")
+        # the key must also separate stacks that share a catalog but differ
+        # in factory or its bound arguments (scorer, checkpoint, tries), or
+        # worker reuse would serve the wrong stack; the broadcast pickles
+        # the factory anyway, so its pickle is the stack's identity
+        stack_id = hashlib.md5(pickle.dumps(stack_factory)).hexdigest()
         payload["cache_key"] = (
             len(payload["ent_names"]),
             len(payload["rel_names"]),

@@ -32,6 +32,20 @@ PAGE_SCHEMA = (
 )
 
 
+def _start(writer, available_now: bool, trigger_interval: Optional[str] = None):
+    """Start a configured DataStreamWriter. ``available_now`` drains the
+    input present now and blocks until done; otherwise the query keeps
+    running, every ``trigger_interval`` when one is given. Returns the
+    query either way."""
+    if available_now:
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination()
+        return q
+    if trigger_interval is not None:
+        writer = writer.trigger(processingTime=trigger_interval)
+    return writer.start()
+
+
 def read_page_stream(
     spark: SparkSession,
     input_dir: str,
@@ -82,11 +96,7 @@ def stream_extract(
         pages.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    return _start(writer, available_now)
 
 
 def stream_page_rates(
@@ -125,11 +135,7 @@ def stream_page_rates(
         .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
         .outputMode("append")
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    return _start(writer, available_now)
 
 
 DOC_STREAM_SCHEMA = "doc_id bigint, text string"
@@ -247,11 +253,7 @@ def stream_dedup_exact(
         .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
         .outputMode("append")
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.trigger(processingTime=trigger_interval).start()
+    return _start(writer, available_now, trigger_interval)
 
 
 def stream_dedup_minhash(
@@ -367,11 +369,7 @@ def stream_dedup_minhash(
         .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
         .outputMode("append")
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.trigger(processingTime=trigger_interval).start()
+    return _start(writer, available_now, trigger_interval)
 
 
 def state_metrics(query) -> dict:
@@ -512,11 +510,7 @@ def stream_fuse_latest(
         .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
         .outputMode("append")
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.trigger(processingTime=trigger_interval).start()
+    return _start(writer, available_now, trigger_interval)
 
 
 def stream_distant_supervision(
@@ -564,11 +558,7 @@ def stream_distant_supervision(
         .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
         .outputMode("append")
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.trigger(processingTime=trigger_interval).start()
+    return _start(writer, available_now, trigger_interval)
 
 
 EVENT_STREAM_SCHEMA = "event_id bigint, ts timestamp, user_id bigint"
@@ -651,11 +641,7 @@ def stream_sessionize(
         .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
         .outputMode("append")
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.trigger(processingTime=trigger_interval).start()
+    return _start(writer, available_now, trigger_interval)
 
 
 def stream_cms_sketch(
@@ -706,8 +692,4 @@ def stream_cms_sketch(
         .foreachBatch(publish)
         .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    return _start(writer, available_now)

@@ -23,9 +23,10 @@ step knows nothing of chunks: ``checkpoint.run_checkpointed`` assigns
 them from ``--n-chunks`` and commits each group.
 
 The entity/relation catalogs come from --ent-catalog/--rel-catalog parquet
-dirs (columns: id, name, provenance) or, absent those, are derived
+dirs (columns: id, name, provenance), from the companion names of
+--ent-trie/--rel-trie artifacts, or, absent both, are derived
 deterministically from the corpus vocabulary (sandbox mode — no external
-data).
+data). The same names drive decode and canonicalization.
 """
 
 from __future__ import annotations
@@ -35,6 +36,7 @@ import json
 import os
 import sys
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -119,7 +121,8 @@ def parse_args(argv=None):
                     help="HF/reference beam normalization (reference runs use 1.0)")
     ap.add_argument("--bos-first", action="store_true",
                     help="force BOS as the first generated token (reference parity)")
-    ap.add_argument("--ent-trie", help="preloaded trie artifact (save_trie_artifacts)")
+    ap.add_argument("--ent-trie", help="preloaded trie artifact (save_trie_artifacts); "
+                    "with --rel-trie, its names are the catalog")
     ap.add_argument("--rel-trie", help="preloaded trie artifact (save_trie_artifacts)")
     ap.add_argument("--hf-checkpoint",
                     help="HF seq2seq checkpoint (e.g. the GenIE BART); each "
@@ -169,6 +172,13 @@ def parse_args(argv=None):
     args = ap.parse_args(argv)
     if not args.input or not args.output:
         ap.error("--input and --output are required (CLI or --config)")
+    tries = args.ent_trie or args.rel_trie
+    if tries and not (args.ent_trie and args.rel_trie):
+        ap.error("--ent-trie and --rel-trie must be given together")
+    if tries and (args.hf_checkpoint or args.ent_catalog or args.rel_catalog):
+        ap.error("trie artifacts carry their own names and WordTokenizer "
+                 "ids; they cannot be combined with --hf-checkpoint or "
+                 "--ent-catalog/--rel-catalog")
     return args
 
 
@@ -205,21 +215,34 @@ def main():
             boilerplate_min_df=args.boilerplate_min_df,
         )
 
-    # catalogs derive from the CURATED corpus: dropped/redacted text must
-    # not contribute vocabulary
-    ents, rels = load_catalogs(spark, args, pages)
-
     from genie_spark.checkpoint import lineage_df, run_checkpointed
     from genie_spark.canonicalize import materialize_graph, write_graph
-    from genie_spark.pipeline import GenieExtractor, extract_pipeline
+    from genie_spark.pipeline import (
+        GenieExtractor,
+        default_stack_factory,
+        extract_pipeline,
+        hf_stack_factory,
+        load_trie_artifacts,
+    )
 
+    # one name list per side feeds both decode and canonicalization, so
+    # every decoded name links to its own id
+    if args.ent_trie:
+        ents, rels, stack_factory = load_trie_artifacts(args.ent_trie, args.rel_trie)
+    else:
+        # catalogs derive from the CURATED corpus: dropped/redacted text
+        # must not contribute vocabulary
+        ents, rels = load_catalogs(spark, args, pages)
+        stack_factory = (
+            partial(hf_stack_factory, checkpoint=args.hf_checkpoint,
+                    device=args.hf_device)
+            if args.hf_checkpoint else default_stack_factory
+        )
     extractor = GenieExtractor(
         spark, ents, rels, num_beams=args.num_beams,
         num_return_sequences=args.num_return_sequences,
         length_penalty=args.length_penalty, bos_first=args.bos_first,
-        trie_artifacts=(args.ent_trie, args.rel_trie)
-        if args.ent_trie and args.rel_trie else None,
-        hf_checkpoint=args.hf_checkpoint, hf_device=args.hf_device,
+        stack_factory=stack_factory,
     )
 
     def process(pages_subset: DataFrame) -> DataFrame:

@@ -1,6 +1,8 @@
-"""run_pipeline CLI: JSON config layering (CLI > config > defaults)."""
+"""run_pipeline CLI: JSON config layering (CLI > config > defaults), stack
+flag validation, and the names a trie-artifact run canonicalizes against."""
 
 import json
+import os
 
 import pytest
 
@@ -39,3 +41,69 @@ def test_config_rejects_unknown_keys(tmp_path):
 def test_missing_required_still_errors():
     with pytest.raises(SystemExit):
         run_pipeline.parse_args(["--input", "only-input"])
+
+
+@pytest.mark.parametrize("extra", [
+    ["--ent-trie", "e"],
+    ["--rel-trie", "r"],
+    ["--ent-trie", "e", "--rel-trie", "r", "--hf-checkpoint", "ckpt"],
+    ["--ent-trie", "e", "--rel-trie", "r", "--ent-catalog", "c", "--rel-catalog", "d"],
+])
+def test_stack_flags_validated_at_parse_time(extra):
+    """A lone trie flag, or trie artifacts combined with a stack or
+    catalog they would silently override, is a usage error before any
+    Spark work starts."""
+    with pytest.raises(SystemExit):
+        run_pipeline.parse_args(["--input", "i", "--output", "o", *extra])
+
+
+def _run_main(argv):
+    """run_pipeline.main() in-process on the test session (its stop() is
+    neutered); returns the printed summary."""
+    import sys
+    from unittest import mock
+
+    from pyspark.sql import SparkSession
+
+    printed = []
+    with mock.patch.object(sys, "argv", ["run_pipeline.py", *argv]), \
+            mock.patch.object(SparkSession, "stop", lambda self: None), \
+            mock.patch("builtins.print", lambda *a, **k: printed.append(a)):
+        run_pipeline.main()
+    return json.loads(printed[-1][0])
+
+
+def test_trie_artifacts_canonicalize_against_their_names(spark, tmp_path):
+    """A run decoding with --ent-trie/--rel-trie must link against the
+    artifacts' own names: its graph equals a run given those names as
+    --ent-catalog/--rel-catalog parquet."""
+    from genie_spark import synth
+    from genie_spark.pipeline import save_trie_artifacts
+
+    ents = synth.unique_entity_names(synth.make_entities())
+    rels = sorted(synth.RELATIONS)
+    save_trie_artifacts(ents, rels, str(tmp_path / "ent"), str(tmp_path / "rel"))
+    for name, names in (("ent_cat", ents), ("rel_cat", rels)):
+        spark.createDataFrame(
+            [(str(i), n, "en_title") for i, n in enumerate(names)],
+            ["id", "name", "provenance"],
+        ).coalesce(1).write.parquet(str(tmp_path / name))
+    synth.pages_df(spark, 12).write.parquet(str(tmp_path / "pages"))
+
+    def graph(tag, flags):
+        out = str(tmp_path / tag)
+        summary = _run_main([
+            "--input", str(tmp_path / "pages"), "--output", out,
+            "--cpus", "0", "--n-chunks", "2", *flags,
+        ])
+        rows = spark.read.parquet(os.path.join(out, "graph")).collect()
+        assert summary["graph_triples"] == len(rows)
+        return sorted(tuple(sorted(r.asDict().items())) for r in rows)
+
+    got = graph("tries", ["--ent-trie", str(tmp_path / "ent"),
+                          "--rel-trie", str(tmp_path / "rel")])
+    want = graph("catalog", ["--ent-catalog", str(tmp_path / "ent_cat"),
+                             "--rel-catalog", str(tmp_path / "rel_cat")])
+    assert want, "the catalog run must link some triples"
+    assert any(" " in dict(r)["subj_name"] for r in want)
+    assert got == want

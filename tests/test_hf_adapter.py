@@ -13,13 +13,17 @@ splitting as [Ġ<, tag, >]). What IS fully tested here:
 * end-to-end constrained beam search in a NON-WordTokenizer id space —
   multi-piece names walked through the trie cursor, EOS→'<' swap,
   grammar well-formedness, catalog closure of every emitted name;
-* scorer_factory plumbing: a non-default scorer injected through
-  GenieExtractor's broadcast reaches the executors (mapInPandas output
-  matches the driver-side twin of that scorer and differs from the
-  default scorer's output).
+* stack_factory plumbing: a non-default scorer bound into
+  default_stack_factory reaches the executors through GenieExtractor's
+  broadcast (mapInPandas output matches the single-process twin of that
+  scorer and differs from the default scorer's output);
+* the HF stack's contract (construction, std-pickle payload,
+  distinct cache keys) up to the import guard that stops it here.
 """
 
+import pickle
 import re
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -176,7 +180,7 @@ def test_bos_first_in_bpe_space(adapter):
 
 
 # ---------------------------------------------------------------------------
-# scorer_factory plumbing through the distributed pipeline
+# stack_factory plumbing through the distributed pipeline
 # ---------------------------------------------------------------------------
 
 
@@ -195,13 +199,14 @@ def _driver_twin(texts, ents, rels, scorer_cls):
 
 
 def test_scorer_factory_reaches_executors(spark):
-    """GenieExtractor(scorer_factory=UniformScorer) must build the
-    injected scorer on the executors: pipeline output matches the
+    """GenieExtractor(stack_factory=partial(default_stack_factory,
+    scorer=UniformScorer)) must build the injected scorer on the
+    executors: pipeline output matches the
     driver-side UniformScorer twin and differs from the default
     DeterministicScorer output (so the selection demonstrably took
     effect), while the default path's goldens stay covered by
     test_spark_pipeline."""
-    from genie_spark.pipeline import GenieExtractor
+    from genie_spark.pipeline import GenieExtractor, default_stack_factory
 
     texts = [
         "Albert Einstein was born in Zurich.",
@@ -211,7 +216,8 @@ def test_scorer_factory_reaches_executors(spark):
     df = spark.createDataFrame([(t,) for t in texts], ["input"])
 
     uni = GenieExtractor(
-        spark, ENTS, RELS, num_beams=2, scorer_factory=UniformScorer
+        spark, ENTS, RELS, num_beams=2,
+        stack_factory=partial(default_stack_factory, scorer=UniformScorer),
     ).transform(df)
     got_uni = {r["input"]: r["prediction"] for r in uni.collect()}
     assert got_uni == _driver_twin(texts, ENTS, RELS, UniformScorer)
@@ -278,11 +284,23 @@ def test_adapter_decode_strips_only_0x20(adapter):
     assert adapter.decode(adapter.encode("Zurich")) == "Zurich"
 
 
-def test_hf_checkpoint_exclusive_with_other_stacks(spark):
-    from genie_spark.pipeline import GenieExtractor
+def test_hf_stack_factory_guard(spark):
+    """The HF stack cannot run here (no torch/transformers), so this pins
+    its contract: GenieExtractor accepts the partial, the
+    payload survives the std-pickle round trip Spark's broadcast makes,
+    the cache key separates it from the default stack and from another
+    checkpoint, and on a worker the factory gets as far as the scorer's
+    import guard."""
+    from genie_spark.pipeline import GenieExtractor, hf_stack_factory
 
-    with pytest.raises(ValueError, match="hf_checkpoint"):
-        GenieExtractor(
-            spark, ENTS, RELS, hf_checkpoint="some/ckpt",
-            scorer_factory=UniformScorer,
-        )
+    def hf(ckpt):
+        factory = partial(hf_stack_factory, checkpoint=ckpt, device="cpu")
+        return GenieExtractor(spark, ENTS, RELS, stack_factory=factory)
+
+    payload = pickle.loads(pickle.dumps(hf("x")._bc.value))
+    key_default = GenieExtractor(spark, ENTS, RELS)._bc.value["cache_key"]
+    key_y = hf("y")._bc.value["cache_key"]
+    assert payload["cache_key"][:3] == key_default[:3] == key_y[:3]
+    assert len({payload["cache_key"], key_default, key_y}) == 3
+    with pytest.raises(NotImplementedError, match="torch"):
+        payload["stack_factory"](payload)

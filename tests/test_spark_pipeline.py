@@ -391,10 +391,15 @@ def test_bounded_split_byte_identical(spark):
 
 
 def test_extractor_accepts_trie_artifacts(spark, tmp_path):
-    """GenieExtractor(trie_artifacts=...) must produce bit-identical output
-    to the build-from-names path (S10: the persisted trie is the same
-    trie)."""
-    from genie_spark.pipeline import GenieExtractor, extract_pipeline, save_trie_artifacts
+    """GenieExtractor over load_trie_artifacts' names + stack factory must
+    produce bit-identical output to the build-from-names path (S10: the
+    persisted trie is the same trie)."""
+    from genie_spark.pipeline import (
+        GenieExtractor,
+        extract_pipeline,
+        load_trie_artifacts,
+        save_trie_artifacts,
+    )
 
     ents = synth.unique_entity_names(synth.make_entities())
     rels = sorted(synth.RELATIONS)
@@ -404,9 +409,11 @@ def test_extractor_accepts_trie_artifacts(spark, tmp_path):
 
     pages = synth.pages_df(spark, 12)
     base = extract_pipeline(spark, pages, ents, rels)
+    a_ents, a_rels, factory = load_trie_artifacts(ent_path, rel_path)
+    assert (a_ents, a_rels) == (sorted(set(ents)), rels)
     loaded = extract_pipeline(
         spark, pages, [], [],
-        extractor=GenieExtractor(spark, [], [], trie_artifacts=(ent_path, rel_path)),
+        extractor=GenieExtractor(spark, a_ents, a_rels, stack_factory=factory),
     )
     key = lambda df: sorted(
         (r["url"], r["sent_idx"], r["prediction"],
