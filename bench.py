@@ -462,7 +462,8 @@ def run_gen_only(sf_dir: str, cpus: int, replicate: int) -> dict:
     n_docs = docs.count()
     pages = entry_mod._docs_as_pages(docs)
     # warm EVERY worker: a small replicate with the same auto-partitioning
-    # (2× parallelism) touches all of them, paying the pandas-import cost
+    # (one decode task per core) touches all of them, paying the
+    # pandas-import cost
     warm_docs = _replicated_docs(spark, sf_dir, 2)
     _sink(
         extract_pipeline(

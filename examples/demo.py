@@ -75,15 +75,13 @@ def main(spark: SparkSession = None) -> None:
 
     # 3. Canonicalize surface forms to catalog ids (notebook:
     # map_names_to_ids / convert_to_triplets with surface_form_mappings)
-    from genie_spark.canonicalize import surface_to_id
+    from genie_spark.canonicalize import catalog_df, surface_to_id
 
-    ent_cat = spark.createDataFrame(
-        [(f"Q{i}", n, "en_title") for i, n in enumerate(ENTITIES)],
-        ["id", "name", "provenance"],
+    ent_cat = catalog_df(
+        spark, [f"Q{i}" for i in range(len(ENTITIES))], ENTITIES, "en_title"
     )
-    rel_cat = spark.createDataFrame(
-        [(f"P{i}", n, "en_title") for i, n in enumerate(RELATIONS)],
-        ["id", "name", "provenance"],
+    rel_cat = catalog_df(
+        spark, [f"P{i}" for i in range(len(RELATIONS))], RELATIONS, "en_title"
     )
     triples = out.select(F.explode("pred_triples").alias("t")).select(
         "t.s", "t.r", "t.o"

@@ -21,11 +21,33 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Optional, Sequence, Union
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
+
+
+def catalog_df(
+    spark: SparkSession,
+    ids: Sequence,
+    names: Sequence[str],
+    provenance: Union[str, Sequence[str]],
+) -> DataFrame:
+    """A driver-built name↔id catalog (id, name, provenance) as a
+    JVM-resident frame. Built from a pyarrow table it plans as
+    ``LocalTableScan``, so every scan of it in the canonicalize joins stays
+    in the JVM; ``createDataFrame(list)`` plans as ``Scan ExistingRDD``
+    over a PythonRDD and starts Python tasks on every scan. The id
+    column's type follows ``ids`` (string or long); ``provenance`` is one
+    value for every row or one per row."""
+    import pyarrow as pa
+
+    if isinstance(provenance, str):
+        provenance = [provenance] * len(names)
+    return spark.createDataFrame(
+        pa.table({"id": list(ids), "name": list(names), "provenance": list(provenance)})
+    )
 
 
 def dedup_catalog(catalog: DataFrame) -> DataFrame:

@@ -4153,7 +4153,6 @@ def token_windows_q(spark, sf_dir):
 
 
 _FLAGSHIP_CACHE: Dict[tuple, tuple] = {}
-_CATALOG_DF_CACHE: Dict[tuple, tuple] = {}
 
 
 def _flagship_extraction(spark, sf_dir, constrained=True):
@@ -4218,26 +4217,15 @@ def graph_materialize_q(spark, sf_dir):
     projection is the name triple + provenance, which the twin oracle
     reproduces as plain SQL over the flagship VALUES literal
     (oracle_twin.graph_oracle_sql)."""
-    from .canonicalize import materialize_graph
+    from .canonicalize import catalog_df, materialize_graph
 
     ex, out = _flagship_extraction(spark, sf_dir)
     key = (spark.sparkContext.applicationId, sf_dir)
     _, ents, rels, _ = _FLAGSHIP_CACHE[key]
-    cat_key = key + ("catalog_dfs",)
-    cached = _CATALOG_DF_CACHE.get(cat_key)
-    if cached is None:
-        # building a ~6k-row DataFrame from python tuples costs seconds;
-        # the catalogs are fixed per corpus, so build once per session
-        cached = tuple(
-            spark.createDataFrame(
-                [(i, n, "corpus") for i, n in enumerate(names)],
-                ["id", "name", "provenance"],
-            ).cache()
-            for names in (ents, rels)
-        )
-        _CATALOG_DF_CACHE.clear()
-        _CATALOG_DF_CACHE[cat_key] = cached
-    ents_df, rels_df = cached
+    ents_df, rels_df = (
+        catalog_df(spark, range(len(names)), names, "corpus")
+        for names in (ents, rels)
+    )
     g = materialize_graph(out, ents_df, rels_df, salt_buckets=8)
     return g.select(
         "subj_name", "pred_name", "obj_name",

@@ -179,19 +179,18 @@ PAGES_SCHEMA = StructType(
     ]
 )
 
-CATALOG_SCHEMA = StructType(
-    [
-        StructField("id", StringType()),
-        StructField("name", StringType()),
-        StructField("provenance", StringType()),
-    ]
-)
-
 
 def catalogs_df(spark: SparkSession) -> Tuple[DataFrame, DataFrame]:
-    ents = spark.createDataFrame(make_entities(), CATALOG_SCHEMA)
-    rels = spark.createDataFrame(make_relations(), CATALOG_SCHEMA)
-    return ents, rels
+    """(entity, relation) catalog frames: id, name, provenance strings."""
+    from .canonicalize import catalog_df
+
+    return tuple(
+        catalog_df(
+            spark, [r["id"] for r in rows], [r["name"] for r in rows],
+            [r["provenance"] for r in rows],
+        )
+        for rows in (make_entities(), make_relations())
+    )
 
 
 def pages_df(spark: SparkSession, n: int, seed: int = SEED, partitions: int = 0) -> DataFrame:

@@ -26,7 +26,9 @@ The entity/relation catalogs come from --ent-catalog/--rel-catalog parquet
 dirs (columns: id, name, provenance), from the companion names of
 --ent-trie/--rel-trie artifacts, or, absent both, are derived
 deterministically from the corpus vocabulary (sandbox mode — no external
-data). The same names drive decode and canonicalization.
+data). The same names drive decode and canonicalization; the graph keeps
+a parquet catalog's own ids and gives the other two positional
+``Q{i}``/``P{i}`` ids.
 """
 
 from __future__ import annotations
@@ -72,17 +74,29 @@ def load_pages(spark: SparkSession, args) -> DataFrame:
     return df
 
 
+def positional_catalogs(spark: SparkSession, ents, rels):
+    """Catalog frames for name lists that carry no ids of their own:
+    ``Q{i}``/``P{i}`` by position, provenance ``en_title``."""
+    from genie_spark.canonicalize import catalog_df
+
+    return tuple(
+        catalog_df(spark, [f"{p}{i}" for i in range(len(names))], names, "en_title")
+        for p, names in (("Q", ents), ("P", rels))
+    )
+
+
 def load_catalogs(spark: SparkSession, args, pages: DataFrame):
+    """(entity names, relation names, entity catalog, relation catalog).
+    Parquet catalogs canonicalize as read, with their own ids and
+    provenance; their names drive decode."""
     if args.ent_catalog and args.rel_catalog:
-        ents = [
-            r["name"]
-            for r in spark.read.parquet(args.ent_catalog).select("name").collect()
-        ]
-        rels = [
-            r["name"]
-            for r in spark.read.parquet(args.rel_catalog).select("name").collect()
-        ]
-        return ents, rels
+        ent_cat = spark.read.parquet(args.ent_catalog)
+        rel_cat = spark.read.parquet(args.rel_catalog)
+        ents, rels = (
+            [r["name"] for r in cat.select("name").collect()]
+            for cat in (ent_cat, rel_cat)
+        )
+        return ents, rels, ent_cat, rel_cat
     # closed-world catalog from the corpus vocabulary (deterministic).
     # Words containing '<' are excluded: '<' is the tag-grammar char and
     # the redaction stage introduces <EMAIL>/<URL> tokens — neither may
@@ -94,7 +108,9 @@ def load_catalogs(spark: SparkSession, args, pages: DataFrame):
         .collect()
     )
     vocab = sorted(r["w"] for r in words)
-    return [w for w in vocab if len(w) >= 4], [w for w in vocab if len(w) == 3]
+    ents = [w for w in vocab if len(w) >= 4]
+    rels = [w for w in vocab if len(w) == 3]
+    return (ents, rels, *positional_catalogs(spark, ents, rels))
 
 
 def parse_args(argv=None):
@@ -225,14 +241,15 @@ def main():
         load_trie_artifacts,
     )
 
-    # one name list per side feeds both decode and canonicalization, so
-    # every decoded name links to its own id
+    # one catalog per side feeds both decode (its names) and
+    # canonicalization, so every decoded name links to its own id
     if args.ent_trie:
         ents, rels, stack_factory = load_trie_artifacts(args.ent_trie, args.rel_trie)
+        ent_cat, rel_cat = positional_catalogs(spark, ents, rels)
     else:
         # catalogs derive from the CURATED corpus: dropped/redacted text
         # must not contribute vocabulary
-        ents, rels = load_catalogs(spark, args, pages)
+        ents, rels, ent_cat, rel_cat = load_catalogs(spark, args, pages)
         stack_factory = (
             partial(hf_stack_factory, checkpoint=args.hf_checkpoint,
                     device=args.hf_device)
@@ -263,14 +280,6 @@ def main():
 
     # downstream: canonicalize + graph materialize from the checkpointed data
     extracted = spark.read.parquet(os.path.join(extract_out, "data"))
-    ent_cat = spark.createDataFrame(
-        [(f"Q{i}", n, "en_title") for i, n in enumerate(ents)],
-        ["id", "name", "provenance"],
-    )
-    rel_cat = spark.createDataFrame(
-        [(f"P{i}", n, "en_title") for i, n in enumerate(rels)],
-        ["id", "name", "provenance"],
-    )
     graph = materialize_graph(
         extracted, ent_cat, rel_cat, salt_buckets=args.salt_buckets
     )

@@ -241,3 +241,32 @@ def test_group_commit_job_budget(spark, process, tmp_path):
             sc.setLocalProperty(prop, None)
     jobs = sc.statusTracker().getJobIdsForGroup("checkpoint-job-budget")
     assert 0 < len(jobs) <= 2 * n_groups + 2, len(jobs)
+
+
+def test_decode_stage_runs_one_task_per_core(spark, process, tmp_path):
+    """Each chunk group's decode stage launches exactly defaultParallelism
+    tasks: one Python task per core. The pages are one parquet file, so
+    the scan and count stages run one task each and the only multi-task
+    stages are the G decode stages."""
+    src = str(tmp_path / "pages")
+    synth.pages_df(spark, N_PAGES).coalesce(1).write.parquet(src)
+    n_groups = 3
+    sc = spark.sparkContext
+    sc.setJobGroup("checkpoint-decode-tasks", "run_checkpointed decode tasks")
+    try:
+        run_checkpointed(
+            spark, spark.read.parquet(src), process, str(tmp_path / "graph_out"),
+            n_chunks=N_CHUNKS, chunks_per_job=N_CHUNKS // n_groups,
+        )
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    st = sc.statusTracker()
+    stages = {
+        s: st.getStageInfo(s)
+        for j in st.getJobIdsForGroup("checkpoint-decode-tasks")
+        for s in st.getJobInfo(j).stageIds
+    }
+    # a stage AQE already ran in an earlier job is listed again, skipped
+    ran = [i.numTasks for _, i in sorted(stages.items()) if i and i.numCompletedTasks]
+    assert [n for n in ran if n > 1] == [sc.defaultParallelism] * n_groups, ran

@@ -83,9 +83,9 @@ def test_trie_artifacts_canonicalize_against_their_names(spark, tmp_path):
     ents = synth.unique_entity_names(synth.make_entities())
     rels = sorted(synth.RELATIONS)
     save_trie_artifacts(ents, rels, str(tmp_path / "ent"), str(tmp_path / "rel"))
-    for name, names in (("ent_cat", ents), ("rel_cat", rels)):
+    for name, p, names in (("ent_cat", "Q", ents), ("rel_cat", "P", rels)):
         spark.createDataFrame(
-            [(str(i), n, "en_title") for i, n in enumerate(names)],
+            [(f"{p}{i}", n, "en_title") for i, n in enumerate(names)],
             ["id", "name", "provenance"],
         ).coalesce(1).write.parquet(str(tmp_path / name))
     synth.pages_df(spark, 12).write.parquet(str(tmp_path / "pages"))
@@ -107,3 +107,34 @@ def test_trie_artifacts_canonicalize_against_their_names(spark, tmp_path):
     assert want, "the catalog run must link some triples"
     assert any(" " in dict(r)["subj_name"] for r in want)
     assert got == want
+
+
+def test_parquet_catalog_ids_reach_the_graph(spark, tmp_path):
+    """--ent-catalog/--rel-catalog canonicalize against the parquet
+    catalogs as read: the graph's ids are the catalogs' own, not
+    positions in the name lists."""
+    from genie_spark import synth
+
+    ids = {}
+    for name, p, names in (
+        ("ent_cat", "Q", synth.unique_entity_names(synth.make_entities())),
+        ("rel_cat", "P", sorted(synth.RELATIONS)),
+    ):
+        rows = [(f"{p}{1000 + i}", n, "en_label") for i, n in enumerate(names)]
+        ids[p] = {n: i for i, n, _ in rows}
+        spark.createDataFrame(rows, ["id", "name", "provenance"]).coalesce(1).write.parquet(
+            str(tmp_path / name)
+        )
+    synth.pages_df(spark, 12).write.parquet(str(tmp_path / "pages"))
+    out = str(tmp_path / "out")
+    _run_main([
+        "--input", str(tmp_path / "pages"), "--output", out, "--cpus", "0",
+        "--n-chunks", "2", "--ent-catalog", str(tmp_path / "ent_cat"),
+        "--rel-catalog", str(tmp_path / "rel_cat"),
+    ])
+    rows = spark.read.parquet(os.path.join(out, "graph")).collect()
+    assert rows, "the catalog run must link some triples"
+    for r in rows:
+        assert (r["subj"], r["pred"], r["obj"]) == (
+            ids["Q"][r["subj_name"]], ids["P"][r["pred_name"]], ids["Q"][r["obj_name"]]
+        )

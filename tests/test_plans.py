@@ -102,8 +102,9 @@ def test_micro_metrics_no_join_single_agg(spark):
 
 
 def test_generation_stage_saturates_cores(spark):
-    """extract_pipeline must repartition a 1-file scan to 2× default
-    parallelism before the mapInPandas stage."""
+    """extract_pipeline must repartition a 1-file scan to default
+    parallelism before the mapInPandas stage: every core decodes, one
+    Python task each."""
     import __spark_entry__ as entry_mod
     from genie_spark.pipeline import extract_pipeline
 
@@ -111,8 +112,68 @@ def test_generation_stage_saturates_cores(spark):
     pages = entry_mod._docs_as_pages(docs)
     ents, rels = entry_mod._corpus_catalogs(docs)
     out = extract_pipeline(spark, pages, ents, rels)
-    want = spark.sparkContext.defaultParallelism * 2
+    want = spark.sparkContext.defaultParallelism
     assert out.rdd.getNumPartitions() == want
+
+
+_CATALOG_COLS = ["id", "name", "provenance"]
+
+
+def _synth_catalogs(spark):
+    from genie_spark import synth
+
+    want = [
+        spark.createDataFrame(rows, "id string, name string, provenance string")
+        for rows in (synth.make_entities(), synth.make_relations())
+    ]
+    return synth.catalogs_df(spark), want
+
+
+def _positional_catalogs(spark):
+    import run_pipeline
+
+    ents, rels = ["Alan Aachen", "Bern", "J. R. Tolkien"], ["spouse", "borders"]
+    want = [
+        spark.createDataFrame(
+            [(f"{p}{i}", n, "en_title") for i, n in enumerate(names)], _CATALOG_COLS
+        )
+        for p, names in (("Q", ents), ("P", rels))
+    ]
+    return run_pipeline.positional_catalogs(spark, ents, rels), want
+
+
+def _graph_materialize_catalogs(spark):
+    from unittest import mock
+
+    import genie_spark.entry_queries as eq
+
+    with mock.patch("genie_spark.canonicalize.materialize_graph") as mg:
+        eq.QUERIES["graph_materialize"](spark, SF_DIR)
+    _, ents, rels, _ = eq._FLAGSHIP_CACHE[(spark.sparkContext.applicationId, SF_DIR)]
+    want = [
+        spark.createDataFrame(
+            [(i, n, "corpus") for i, n in enumerate(names)], _CATALOG_COLS
+        )
+        for names in (ents, rels)
+    ]
+    return mg.call_args.args[1:3], want
+
+
+@pytest.mark.parametrize(
+    "build", [_synth_catalogs, _positional_catalogs, _graph_materialize_catalogs]
+)
+def test_catalog_frames_are_jvm_only(spark, build):
+    """Driver-built catalog frames scan in the JVM (LocalTableScan), not
+    through a PythonRDD that would start Python tasks on every scan of
+    the canonicalize joins, and hold the same rows and schema as the
+    same catalog built from a python list."""
+    got, want = build(spark)
+    for df, ref in zip(got, want):
+        qe = df._jdf.queryExecution()
+        assert "Scan ExistingRDD" not in qe.executedPlan().toString()
+        assert "PythonRDD" not in qe.toRdd().toDebugString()
+        assert df.schema == ref.schema
+        assert df.collect() == ref.collect()
 
 
 def test_exact_dedup_partial_aggregates(spark):
